@@ -6,9 +6,9 @@ one shared mutable bit array behind WATCH/MULTI transactions
 (RedisBitSet.java:36-100, CountingBloomFilterRedis.java:114-156), each
 partition builds an immutable local bitset from its Arrow batches and
 the partials are OR-merged associatively — Spark's partial/final
-aggregation shape, realized with ``mapInPandas`` (partials) +
-``applyInPandas`` tree merge (final), because PySpark has no native
-binary-reducing UDAF over opaque state.
+aggregation shape, realized with ``mapInArrow`` (partials) + an
+``applyInPandas`` tree merge of the partial rows (final), because
+PySpark has no native binary-reducing UDAF over opaque state.
 
 Everything stays vectorized: Arrow batch -> numpy hash matrix ->
 bool-array scatter -> ``np.packbits``.  No per-row Python anywhere in

@@ -27,14 +27,19 @@ The per-key state semantics match the reference:
 from __future__ import annotations
 
 import os
-from typing import Optional
+from typing import Iterator, Optional
 
+import numpy as np
+import pyarrow as pa
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 
-from .build import build_counting, key_column
+from .build import _PositionAccumulator, build_counting, key_column, partial_to_bits
 from .counting import CountingBloomFilter
-from .filter import BloomFilter
+from .filter import BloomFilter, test_positions
+from .hashing import Keys, get_hash_fn
 from .params import FilterConfig
 
 
@@ -452,6 +457,21 @@ def streaming_bloom_build(
     return writer.start()
 
 
+def _batch_dir(output_dir: str, batch_id: int) -> str:
+    """The exactly-once sink's partition dir of one micro-batch."""
+    return output_dir.rstrip("/") + f"/batch_id={batch_id}"
+
+
+def _batch_committed(spark, batch_dir: str) -> bool:
+    """Whether ``batch_dir`` carries parquet's ``_SUCCESS`` marker,
+    checked through the Hadoop filesystem layer, so a remote (hdfs://,
+    s3a://) output_dir works."""
+    from .sharded import _hadoop_fs_and_path
+
+    fs, marker = _hadoop_fs_and_path(spark, batch_dir, "_SUCCESS")
+    return bool(fs.exists(marker))
+
+
 def _write_batch_output(
     new_rows: DataFrame, output_dir: str, batch_id: int, exactly_once: bool
 ) -> None:
@@ -468,22 +488,90 @@ def _write_batch_output(
     so the replay's ``mode("overwrite")`` of that one dir repairs it;
     a crash after the write (before Spark's offset commit) is skipped
     whole.  Readers see a ``batch_id`` partition column (standard
-    partition discovery).  Existence is checked through the Hadoop
-    filesystem layer, so a remote (hdfs://, s3a://) output_dir works
-    — on S3-like stores without atomic dir semantics pair this with a
-    committer that makes ``_SUCCESS`` authoritative."""
-    if not exactly_once:
-        new_rows.write.mode("append").parquet(output_dir)
+    partition discovery).  On S3-like stores without atomic dir
+    semantics pair this with a committer that makes ``_SUCCESS``
+    authoritative."""
+    if exactly_once and _batch_committed(
+        new_rows.sparkSession, _batch_dir(output_dir, batch_id)
+    ):
         return
-    from .sharded import _hadoop_fs_and_path
+    _write_uncommitted_batch(new_rows, output_dir, batch_id, exactly_once)
 
-    batch_dir = output_dir.rstrip("/") + f"/batch_id={batch_id}"
-    fs, marker = _hadoop_fs_and_path(
-        new_rows.sparkSession, batch_dir, "_SUCCESS"
-    )
-    if fs.exists(marker):
-        return
-    new_rows.write.mode("overwrite").parquet(batch_dir)
+
+def _write_uncommitted_batch(
+    new_rows: DataFrame, output_dir: str, batch_id: int, exactly_once: bool
+) -> None:
+    """:func:`_write_batch_output` for a caller that has already found
+    the batch uncommitted (no second ``_SUCCESS`` round trip)."""
+    if exactly_once:
+        new_rows.write.mode("overwrite").parquet(_batch_dir(output_dir, batch_id))
+    else:
+        new_rows.write.mode("append").parquet(output_dir)
+
+
+class _PartialOrParam(AccumulatorParam):
+    """Accumulator of Bloom partials.  Each task adds its one hybrid
+    ``(kind, payload)`` partial (build.py's wire kinds), which travels
+    as is; the driver ORs every update into one dense bitset.  OR is
+    idempotent, so a retried or speculative task's duplicate update
+    cannot change the result."""
+
+    def __init__(self, config: FilterConfig):
+        self.config = config
+
+    def zero(self, value):
+        return None
+
+    def addInPlace(self, acc, part):
+        if part is None:
+            return acc
+        if acc is None:
+            return part
+        bits = (
+            acc if isinstance(acc, np.ndarray)
+            else partial_to_bits(*acc, self.config).copy()
+        )
+        other = (
+            part if isinstance(part, np.ndarray)
+            else partial_to_bits(*part, self.config)
+        )
+        np.bitwise_or(bits, other, out=bits)
+        return bits
+
+
+def _probe_and_record(config: FilterConfig, seen, acc):
+    """Iterator Arrow UDF of one dedup micro-batch: True for each key
+    that ``seen`` (a broadcast bitset, or None) does not contain.  Each
+    key is hashed once; the positions of the new keys feed the task's
+    hybrid partial, added to ``acc`` once the task's input ends.
+    In-batch duplicates of a new key repeat its positions, which the
+    OR merge absorbs, so the result is the filter of the emitted keys.
+    Marked nondeterministic (it has a side effect), so the optimizer
+    neither moves nor repeats it."""
+    m, k = config.m, config.k
+    hash_fn = get_hash_fn(config.hash_method)
+
+    def probe(keys: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        positions = _PositionAccumulator(m, config.num_bytes)
+        bits = None if seen is None else np.frombuffer(seen.value, dtype=np.uint8)
+        any_new = False
+        with np.errstate(over="ignore"):
+            for arr in keys:
+                pos = hash_fn(Keys.from_arrow(arr), m, k)
+                if bits is None:
+                    new = np.ones(len(arr), dtype=bool)
+                else:
+                    new = ~test_positions(bits, pos)
+                    pos = pos[new]
+                if pos.size:
+                    positions.add(pos)
+                    any_new = True
+                yield pa.array(new)
+        if any_new:
+            kind, _, payload = positions.finish()
+            acc.add((kind, payload))
+
+    return arrow_udf(probe, "boolean").asNondeterministic()
 
 
 def _make_dedup_batch_processor(
@@ -500,7 +588,6 @@ def _make_dedup_batch_processor(
     DataFrames (no live stream, no timing)."""
     from .build import build_bloom
     from .fast import FAST_HASH_METHOD
-    from .probe import with_membership
 
     fast = config.hash_method == FAST_HASH_METHOD
     os.makedirs(checkpoint_dir, exist_ok=True)
@@ -512,6 +599,10 @@ def _make_dedup_batch_processor(
 
         with open(config_path, "w") as f:
             json.dump({"config": config.to_dict()}, f)
+    # ONE accumulator per processor, reset every batch: the driver's
+    # accumulator registry never frees entries, so one per batch would
+    # retain one bitset per batch
+    acc = None
 
     def _load(path):
         if not os.path.exists(path):
@@ -525,33 +616,47 @@ def _make_dedup_batch_processor(
             f.write(bf.to_bytes())
         os.replace(tmp, path)
 
+    def _dedup_and_write(batch_df: DataFrame, seen, batch_id: int) -> BloomFilter:
+        """One write with one Python stage: the probe (which also
+        hashes the new keys into the accumulator) -> dropDuplicates ->
+        write.  Returns the emitted keys' filter."""
+        nonlocal acc
+        sc = batch_df.sparkSession.sparkContext
+        if acc is None:
+            acc = sc.accumulator(None, _PartialOrParam(config))
+        acc.value = None
+        seen_bc = None if seen is None else sc.broadcast(seen.to_bytes())
+        try:
+            # probe BEFORE the in-batch dedup: membership is a pure
+            # function of the key, so the dropDuplicates exchange then
+            # carries only the new rows, and only the key enters Python
+            probe = _probe_and_record(config, seen_bc, acc)
+            new_rows = batch_df.where(probe(key_column(col))).dropDuplicates([col])
+            _write_uncommitted_batch(
+                new_rows, output_dir, batch_id, exactly_once_output
+            )
+        finally:
+            if seen_bc is not None:
+                seen_bc.destroy()
+        empty = np.zeros(config.num_bytes, dtype=np.uint8)
+        return BloomFilter(config, acc.accum_param.addInPlace(empty, acc.value))
+
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         cur = _load(bits_path)
         prev = _load(prev_path)
-        seen = cur.clone() if cur is not None else None
+        seen = cur
         if prev is not None:
             seen = prev if seen is None else seen.union(prev)
-        # probe BEFORE the in-batch dedup: membership is a pure function
-        # of the key, so filtering first is equivalent and the
-        # dropDuplicates exchange then carries only the surviving rows.
-        # Both tiers probe via the broadcast-bytes Arrow UDF and build
-        # via the mapInArrow partials: at micro-batch sizes these
-        # measured 2.3x / 4.3x faster than the k blocked broadcast
-        # joins / the explode+bit_or aggregate (round-7 A/B, 500k-row
-        # batches), and for XXHash64KM the numpy replica is
-        # bit-identical to the native expressions (tests/test_fast.py),
-        # so the emitted rows and the stored generations are unchanged.
-        if seen is not None:
-            mcol = "__dedup_member"
-            probed = with_membership(batch_df, col, seen, out_col=mcol)
-            new_rows = probed.where(~F.col(mcol)).drop(mcol)
+        spark = batch_df.sparkSession
+        batch_dir = _batch_dir(output_dir, batch_id)
+        if exactly_once_output and _batch_committed(spark, batch_dir):
+            # replay of a batch whose output is already committed: write
+            # nothing, and fold the committed survivors into the filter
+            # (the crash may have fallen before the filter store)
+            committed = spark.read.schema(batch_df.schema).parquet(batch_dir)
+            bf = build_bloom(committed, col, config)
         else:
-            new_rows = batch_df
-        new_rows = new_rows.dropDuplicates([col])
-        # persist the survivors once, then hash exactly those rows
-        new_rows = new_rows.localCheckpoint(eager=True)
-        _write_batch_output(new_rows, output_dir, batch_id, exactly_once_output)
-        bf = build_bloom(new_rows, col, config)
+            bf = _dedup_and_write(batch_df, seen, batch_id)
         if cur is not None:
             bf.union_inplace(cur)
         if (
@@ -928,13 +1033,17 @@ def streaming_dedup(
     first-seen keys, tracking "seen" in a Bloom filter instead of the
     unbounded exact-state map of ``dropDuplicates``.
 
-    Per micro-batch (foreachBatch): exact-dedup within the batch
-    (``dropDuplicates`` on ``col``), drop rows whose key the
-    accumulated filter already contains, append the survivors to
-    ``output_dir`` (parquet), then OR-merge the survivors' keys into
-    ``<checkpoint_dir>/bitset.bin``.  The probe and the build run on
-    the fast tier (zero Python) when ``config.hash_method ==
-    "XXHash64KM"``, else on the parity-tier pandas probe.
+    Per micro-batch (foreachBatch) one write with one Python stage: an
+    Arrow UDF sees only the key column, hashes each key once and keeps
+    the rows whose key the accumulated filter (the broadcast union of
+    both generations) does not contain; ``dropDuplicates`` on ``col``
+    then dedups those rows within the batch and the survivors go to
+    the parquet write into ``output_dir``.  The same positions feed
+    each task's hybrid partial, which an accumulator OR-merges on the
+    driver into ``<checkpoint_dir>/bitset.bin``.  Every hash method
+    takes this path (``process_batch.tier`` only names it: ``"fast"``
+    for ``"XXHash64KM"``, whose numpy kernel is bit-identical to the
+    native expressions, else ``"parity"``).
 
     Error semantics are one-sided relative to the stream's true first
     occurrences: a true duplicate of an ALREADY-MERGED key is never

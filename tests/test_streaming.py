@@ -384,7 +384,7 @@ def test_streaming_dedup_emits_each_key_once(spark, tmp_path):
 
 
 def test_streaming_dedup_parity_tier(spark, tmp_path):
-    """Same contract on a parity-tier hash method (pandas probe path)."""
+    """Same contract on a parity-tier hash method."""
     from bloomspark.streaming import streaming_dedup
 
     ckpt = str(tmp_path / "dedup_pck")
@@ -968,14 +968,143 @@ def test_streaming_dedup_exactly_once_output(spark, tmp_path):
     os.remove(os.path.join(ck, "bitset.bin"))
     pb(df, 0)
     assert emitted() == sorted(keys), "exactly-once sink re-emitted"
+    # the skipped replay writes nothing, so the filter must learn the
+    # batch's keys from its committed batch_id=0 dir
+    ref = BloomFilter(cfg)
+    ref.add_all(keys)
+    with open(os.path.join(ck, "bitset.bin"), "rb") as f:
+        assert f.read() == ref.to_bytes(), "replay did not fold batch 0"
     # replay after a completed store: still no duplicates, no loss
     pb(df, 0)
     assert emitted() == sorted(keys)
-    # output is batch_id-partitioned; later batches land in their own dir
-    pb(spark.createDataFrame([("new1",)], "key string"), 1)
+    # output is batch_id-partitioned; later batches land in their own
+    # dir, and batch-0 keys stay suppressed after the replay
+    pb(spark.createDataFrame([(k,) for k in keys[:20] + ["new1"]], "key string"), 1)
     got = spark.read.parquet(out)
     assert sorted(r["key"] for r in got.collect()) == sorted(keys + ["new1"])
+    assert [r["key"] for r in got.where("batch_id = 1").collect()] == ["new1"]
     assert {r["batch_id"] for r in got.select("batch_id").collect()} == {0, 1}
+
+
+def test_streaming_dedup_batch_is_one_sql_execution(spark, tmp_path):
+    """A non-replay micro-batch runs ONE SQL execution (probe-and-hash
+    Arrow UDF -> dropDuplicates -> write): the filter update rides on
+    the write through an accumulator instead of a second build job.
+    Counted as the delta of the status store's newest execution id (ids
+    are consecutive): ``executionsCount()`` stops growing once the
+    store holds ``spark.sql.ui.retainedExecutions`` entries."""
+    from bloomspark.streaming import _make_dedup_batch_processor
+
+    cfg = FilterConfig.complete(n=1000, p=1e-9)
+    ck, out = str(tmp_path / "ck"), str(tmp_path / "out")
+    pb = _make_dedup_batch_processor("key", cfg, ck, out)
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_execution_id():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+    def batch(ks):
+        return spark.createDataFrame([(k, 1) for k in ks], "key string, v int")
+
+    for i, ks in enumerate([
+        [f"a{j}" for j in range(40)] * 2,  # empty filter
+        [f"a{j}" for j in range(20, 60)],  # probes the stored filter
+    ]):
+        before = last_execution_id()
+        pb(batch(ks), i)
+        assert last_execution_id() - before == 1, f"batch {i}"
+    emitted = sorted(r["key"] for r in spark.read.parquet(out).collect())
+    assert emitted == sorted(f"a{j}" for j in range(60))
+    with open(os.path.join(ck, "bitset.bin"), "rb") as f:
+        bf = BloomFilter.from_bytes(cfg, f.read())
+    ref = BloomFilter(cfg)
+    ref.add_all(emitted)
+    assert bf.to_bytes() == ref.to_bytes()
+
+
+def test_dedup_partial_accumulator_merge_is_idempotent():
+    """The accumulator's merge ORs partials, so a retried or
+    speculative task adding the same partial twice leaves the bitset
+    md5-equal; sparse and dense partials merge alike."""
+    import hashlib
+
+    import numpy as np
+
+    from bloomspark.build import _PositionAccumulator, partial_to_bits
+    from bloomspark.hashing import hash_positions
+    from bloomspark.streaming import _PartialOrParam
+
+    cfg = FilterConfig.complete(n=1000, p=0.01)
+    param = _PartialOrParam(cfg)
+
+    def md5(bits):
+        return hashlib.md5(bits.tobytes()).hexdigest()
+
+    parts = []
+    for prefix, n_keys in (("s", 10), ("d", 2000)):  # a sparse, a dense partial
+        acc = _PositionAccumulator(cfg.m, cfg.num_bytes)
+        acc.add(hash_positions([f"{prefix}{i}" for i in range(n_keys)], cfg.m,
+                               cfg.k, cfg.hash_method))
+        kind, _, payload = acc.finish()
+        parts.append((kind, payload))
+        once = param.addInPlace(param.zero(None), (kind, payload))
+        twice = param.addInPlace(once, (kind, payload))
+        assert isinstance(twice, np.ndarray)
+        assert md5(twice) == md5(partial_to_bits(kind, payload, cfg)), kind
+    assert [k for k, _ in parts] == ["sparse", "dense"]
+    merged = None
+    for part in parts + parts:
+        merged = param.addInPlace(merged, part)
+    union = np.bitwise_or(*(partial_to_bits(k, p, cfg) for k, p in parts))
+    assert md5(merged) == md5(union)
+
+
+def test_streaming_dedup_non_string_key_keeps_every_column(spark, tmp_path):
+    """A non-string key hashes as its string form, like every other
+    tier, and the emitted rows keep all their columns untouched — also
+    one whose name only differs in case from a helper name, and a key
+    referenced in another case than its column."""
+    from bloomspark.streaming import _make_dedup_batch_processor
+
+    cfg = FilterConfig.complete(n=1000, p=1e-9)
+    ck, out = str(tmp_path / "ck"), str(tmp_path / "out")
+    pb = _make_dedup_batch_processor("ID", cfg, ck, out)
+    schema = "id long, __DEDUP_KEY string, v double"
+    pb(spark.createDataFrame([(i, f"p{i}", i / 2) for i in range(30)] * 2, schema), 0)
+    pb(spark.createDataFrame([(i, f"p{i}", i / 2) for i in range(20, 45)], schema), 1)
+    rows = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+    assert rows == [(i, f"p{i}", i / 2) for i in range(45)]
+    ref = BloomFilter(cfg)
+    ref.add_all([str(i) for i in range(45)])
+    with open(os.path.join(ck, "bitset.bin"), "rb") as f:
+        assert f.read() == ref.to_bytes()
+
+
+def test_dedup_processor_reuses_one_accumulator(spark, tmp_path):
+    """One accumulator per processor, reset every batch: the driver's
+    accumulator registry never frees entries, so its size must stay
+    flat across batches."""
+    from pyspark.accumulators import _accumulatorRegistry
+
+    from bloomspark.streaming import _make_dedup_batch_processor
+
+    cfg = FilterConfig.complete(n=1000, p=1e-9)
+    pb = _make_dedup_batch_processor(
+        "key", cfg, str(tmp_path / "ck"), str(tmp_path / "out")
+    )
+
+    def batch(i):
+        return spark.createDataFrame([(f"k{i}",), ("shared",)], "key string")
+
+    pb(batch(0), 0)
+    size = len(_accumulatorRegistry)
+    for i in range(1, 21):
+        pb(batch(i), i)
+    assert len(_accumulatorRegistry) == size
+    emitted = sorted(r["key"] for r in spark.read.parquet(str(tmp_path / "out")).collect())
+    assert emitted == sorted([f"k{i}" for i in range(21)] + ["shared"])
 
 
 def test_sharded_streaming_dedup_exactly_once_output(spark, tmp_path):
